@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round_coord, round_value
 from ..functions.timeutils import decode_xtime, format_minute, utc_to_lk
-from ..operators.diff import adjacent_diff
 from ..sinks.rfield_files import write_rfield_files
 from ..sources.netcdf import KELANI_EXTENT
+from .wrf_push import interval_grid
 
 
 def build_rfields(
@@ -32,13 +32,7 @@ def build_rfields(
     Returns {'d03': [...paths...], 'kelani': [...]} (kelani only when
     requested, matching create_d03_rfields vs create_d01_rfields —
     gen_rfields.py:113-229 vs :232-334)."""
-    diffed = adjacent_diff(
-        grid,
-        series_cols=["wrf_system", "source_file", "y", "x"],
-        order_col="t_idx",
-        value_col="rainnc_cum",
-        out_col="diff_value",
-    ).select(
+    diffed = interval_grid(grid).select(
         "wrf_system",
         format_minute(
             utc_to_lk(decode_xtime(F.col("epoch_str"), F.col("xtime_min")))

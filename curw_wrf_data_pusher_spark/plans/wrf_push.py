@@ -26,6 +26,26 @@ from ..operators.diff import adjacent_diff
 from .config import WrfConfig
 
 
+def interval_grid(grid: DataFrame) -> DataFrame:
+    """A1: cumulative → per-interval rain (``diff_value``), per grid
+    cell, in time order.  The one lag-diff both E1 (push) and E2
+    (rfields) read: built by this single helper, the two plans share
+    an identical fragment, so a frame persisted by the caller
+    (``plans.runner``) is substituted into both by Spark's cache
+    manager and the decode and the window shuffle run once.
+
+    The shuffle key (system, file, y, x) is high-cardinality and
+    uniform — no skew at any scale; AQE coalesces the tiny tail
+    partitions."""
+    return adjacent_diff(
+        grid,
+        series_cols=["wrf_system", "source_file", "y", "x"],
+        order_col="t_idx",
+        value_col="rainnc_cum",
+        out_col="diff_value",
+    )
+
+
 def push_wrf_grid(
     grid: DataFrame,
     cfg: WrfConfig,
@@ -46,16 +66,7 @@ def push_wrf_grid(
     - runs: one row per series — tms_id, sim_tag, station name/coords,
       source, start/end (run table, wrf_data_pusher.py:239-248).
     """
-    # A1: cumulative → per-interval, per grid cell, in time order.
-    # The shuffle key (system, y, x) is high-cardinality and uniform —
-    # no skew at any scale; AQE coalesces the tiny tail partitions.
-    diffed = adjacent_diff(
-        grid,
-        series_cols=["wrf_system", "source_file", "y", "x"],
-        order_col="t_idx",
-        value_col="rainnc_cum",
-        out_col="diff_value",
-    )
+    diffed = interval_grid(grid)
 
     lat6 = F.format_string("%.6f", round_coord(F.col("latitude")))
     lon6 = F.format_string("%.6f", round_coord(F.col("longitude")))

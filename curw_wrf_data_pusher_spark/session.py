@@ -18,6 +18,30 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+#: the default driver heap: 16g, but never more than this share of the
+#: machine's RAM — in local mode the driver JVM holds every executor's
+#: cache, and a heap sized past physical memory swaps (or is killed)
+#: where a smaller one spills cached blocks to disk
+MAX_DRIVER_MEM_MB = 16 * 1024
+DRIVER_MEM_FRACTION = 0.5
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset:
+    16g capped at ``DRIVER_MEM_FRACTION`` of MemTotal (16g where
+    ``/proc/meminfo`` is unavailable)."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    cap_mb = int(total_kb / 1024 * DRIVER_MEM_FRACTION)
+    return f"{min(MAX_DRIVER_MEM_MB, cap_mb)}m"
+
+
 def get_spark(
     app_name: str = "curw_wrf_data_pusher_spark",
     master: str | None = None,
@@ -42,7 +66,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata writes TIMESTAMP(NANOS) parquet, which Spark rejects

@@ -26,8 +26,27 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..plans.config import WrfConfig
-from ..plans.wrf_push import push_wrf_grid
+from ..plans.wrf_push import interval_grid, push_wrf_grid
 from ..sources.netcdf import GRID_SCHEMA
+
+
+def _push_batch(
+    grid: DataFrame,
+    cfg: WrfConfig,
+    sink: Callable[[DataFrame, DataFrame], None],
+) -> None:
+    """One micro-batch through the E1 plan into ``sink(fact, runs)``.
+
+    The sink consumes BOTH outputs (fact write + runs-dim upsert, each
+    a separate action); persisting the batch's interval grid — the
+    frame ``plans.runner`` caches for a batch run — keeps every action
+    from re-running the decode and the lag-diff shuffle."""
+    diffed = interval_grid(grid).persist()
+    try:
+        fact, runs = push_wrf_grid(grid, cfg)
+        sink(fact, runs)
+    finally:
+        diffed.unpersist()
 
 
 def stream_wrf_push(
@@ -59,8 +78,7 @@ def stream_wrf_push(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        fact, runs = push_wrf_grid(batch_df, cfg)
-        sink(fact, runs)
+        _push_batch(batch_df, cfg, sink)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -122,16 +140,7 @@ def stream_wrf_nc_push(
             batch_df.select("path", "modificationTime", "content"),
             bbox=bbox,
         )
-        # persist the decoded grid for the batch: the sink consumes
-        # BOTH outputs (fact write + runs-dim upsert, each a separate
-        # action), and without this every action re-runs the byte
-        # decode — measured 3× the decode cost on a full-size d03 push
-        grid = grid.persist()
-        try:
-            fact, runs = push_wrf_grid(grid, cfg)
-            sink(fact, runs)
-        finally:
-            grid.unpersist()
+        _push_batch(grid, cfg, sink)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

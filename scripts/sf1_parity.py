@@ -166,12 +166,15 @@ def main() -> None:
     from curw_wrf_data_pusher_spark.session import get_spark
     from tests.oracle_harness import canonical_hash, duckdb_connection
 
-    names = [n for n in CANDIDATES if n in QUERIES and n in ORACLES]
+    # a name that does not resolve is a typo or a retired query: fail
+    # loudly rather than run a smaller sweep than CANDIDATES declares
+    missing = [n for n in CANDIDATES if n not in QUERIES or n not in ORACLES]
+    assert not missing, f"CANDIDATES without a query or oracle: {missing}"
     spark = get_spark("sf1-parity")
     con = duckdb_connection(dst)
     results = {}
     n_match = 0
-    for name in names:
+    for name in CANDIDATES:
         QUERIES[name](spark, dst).toPandas()  # untimed warm-up
         try:
             load1 = round(os.getloadavg()[0], 2)
@@ -194,14 +197,14 @@ def main() -> None:
     artifact = {
         "sf_equivalent": 1.0, "factor": FACTOR, "src": src,
         "round": rnd, "twin_build_s": build_s,
-        "n_queries": len(names), "n_match": n_match,
+        "n_queries": len(CANDIDATES), "n_match": n_match,
         "results": results,
     }
     with open(out_path, "w") as f:
         json.dump(artifact, f, indent=1)
     print(json.dumps({k: v for k, v in artifact.items()
                       if k != "results"}))
-    sys.exit(0 if n_match == len(names) else 1)
+    sys.exit(0 if n_match == len(CANDIDATES) else 1)
 
 
 if __name__ == "__main__":

@@ -129,6 +129,96 @@ def test_runner_end_to_end_and_error_capture(spark, tmp_path):
     assert report2.steps[0]["detail"]
 
 
+def _write_fixture_nc(base) -> int:
+    """The runner fixture grid as one classic .nc per system, in
+    ``<base>/<system>/`` so the reader recovers the system from the
+    path.  Returns the file count."""
+    import numpy as np
+
+    from curw_wrf_data_pusher_spark.sources.netcdf3 import NetCDF3Writer
+
+    from .wrf_fixture import H, SYSTEMS, T, W
+
+    pdf = make_grid_pdf()
+    for system in SYSTEMS:
+        g = pdf[pdf["wrf_system"] == system].sort_values(["t_idx", "y", "x"])
+        os.makedirs(base / system)
+        w = NetCDF3Writer(str(base / system / "d03_RAINNC.nc"))
+        w.createDimension("Time", None)
+        w.createDimension("south_north", H)
+        w.createDimension("west_east", W)
+        xt = w.createVariable("XTIME", "i8", ("Time",))
+        xt[:] = 15 * (np.arange(T, dtype="i8") + 1)
+        xt.description = f"minutes since {EPOCH_STR}"
+        for name, col in (("XLAT", "latitude"), ("XLONG", "longitude"),
+                          ("RAINNC", "rainnc_cum")):
+            v = w.createVariable(
+                name, "f4", ("Time", "south_north", "west_east")
+            )
+            v[:] = g[col].to_numpy("f4").reshape(T, H, W)
+        w.close()
+    return len(SYSTEMS)
+
+
+def test_runner_decodes_once_and_releases_its_cache(spark, tmp_path):
+    """One run_wrf_push decodes each (file, slab) once, although the
+    push and rfields steps run about seven Spark actions over the
+    grid; and every path — success, a failed push step, the emptiness
+    guard — leaves the cache manager empty."""
+    from curw_wrf_data_pusher_spark.sources.netcdf import (
+        GRID_SCHEMA,
+        _default_open_dataset,
+        read_wrf_grid_split,
+    )
+
+    n_files, splits = _write_fixture_nc(tmp_path / "nc"), 3
+    opens = spark.sparkContext.accumulator(0)
+    open_dataset = _default_open_dataset()
+
+    def counting_open(content):
+        opens.add(1)
+        return open_dataset(content)
+
+    def read():
+        return read_wrf_grid_split(
+            spark, str(tmp_path / "nc"), splits_per_file=splits,
+            open_dataset=counting_open,
+        )
+
+    # one pass = one action over a fresh read: every (file, slab) task
+    # opens its file twice (the time-axis probe, then the slab decode)
+    read().write.format("noop").mode("overwrite").save()
+    one_pass = opens.value
+    assert one_pass == 2 * n_files * splits
+
+    spark.catalog.clearCache()
+    opens.value = 0
+    report = run_wrf_push(
+        spark, CFG, read(), str(tmp_path / "store"),
+        rfield_dir=str(tmp_path / "rf"),
+    )
+    assert report.ok, report.steps
+    steps = {s["step"]: s for s in report.steps}
+    # the same figures as test_runner_end_to_end_and_error_capture
+    assert steps["push"]["rows"] == 2 * 12 * 6 * 5
+    assert steps["push"]["series"] == 2 * 6 * 5
+    assert steps["rfields"]["files"] == 2 * (2 * 12)
+    assert opens.value == one_pass, "the grid was decoded more than once"
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+
+    bad = run_wrf_push(spark, CFG, spark.range(3), str(tmp_path / "s2"))
+    assert [s["step"] for s in bad.steps] == ["push"] and not bad.ok
+    assert cache.isEmpty()
+
+    # the emptiness guard fires when an empty grid meets an existing
+    # store (into a fresh store the first write itself fails)
+    empty = spark.createDataFrame([], GRID_SCHEMA)
+    guard = run_wrf_push(spark, CFG, empty, str(tmp_path / "store"))
+    assert guard.steps[0]["detail"] == "timeseries is empty"
+    assert cache.isEmpty()
+
+
 def test_runner_seq_variant_single_system(spark, tmp_path):
     grid = (
         spark.createDataFrame(make_grid_pdf())

@@ -60,3 +60,22 @@ def test_registered_callable_pins_confs(vanilla_confs, sf_dir):
     QUERIES["p6_station_names"](spark, sf_dir)
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_default_driver_memory_fits_the_machine(tmp_path):
+    """The default heap is 16g capped at a share of MemTotal, so on a
+    small box cached frames spill instead of the JVM outgrowing RAM."""
+    from curw_wrf_data_pusher_spark.session import (
+        DRIVER_MEM_FRACTION,
+        MAX_DRIVER_MEM_MB,
+        _default_driver_memory,
+    )
+
+    def with_total(gb: int) -> str:
+        p = tmp_path / f"meminfo_{gb}"
+        p.write_text(f"MemTotal:       {gb * 1024 * 1024} kB\nMemFree: 1 kB\n")
+        return _default_driver_memory(str(p))
+
+    assert with_total(15) == f"{int(15 * 1024 * DRIVER_MEM_FRACTION)}m"
+    assert with_total(256) == f"{MAX_DRIVER_MEM_MB}m"
+    assert _default_driver_memory(str(tmp_path / "absent")) == "16384m"
