@@ -85,6 +85,15 @@ def _ordered_prefix(
     # can land a hair ABOVE the rational value (0.4·5 → 2.0000…04) and
     # a ceil overestimate would SHORTEN the prefix — a recall bug.
     # Subtracting 1e-9 only ever lengthens the prefix (safe side).
+    # Envelope: the guard must exceed the rounding of the computed
+    # products.  With u = 2⁻⁵³ and t ≤ 1, t·n is two roundings (t to
+    # double, the product): error ≤ 2.01·u·t·n ≤ 2.3e-16·n.  The
+    # verify's t/(1+t)·(n_i + n_j) is four (t, 1 + t, the quotient,
+    # the product) on a factor ≤ 1/2: error ≤ 2.3e-16·(n_i + n_j).
+    # So 1e-9 is safe for sets of up to 10⁶ tokens (pair sums up to
+    # 2·10⁶, error ≤ 4.6e-10), with 2× headroom; beyond that, switch
+    # to a relative guard.  An over-long prefix or a loosened bound
+    # only adds candidates that the exact verify drops.
     prefix_len = (
         F.col("__n")
         - F.ceil(F.lit(threshold) * F.col("__n") - F.lit(1e-9))

@@ -70,23 +70,11 @@ def _fold_dot_sql(a: str, b: str) -> str:
     )
 
 
-_DOT_FORM = os.environ.get("SPARK_GRAFT_DOT_FORM", "seqfold")
-
-
 def _fixed_dot_sql(a: str, b: str, d: int) -> str:
     """Known-dimension dot product, value-identical to the fold (same
-    left-association from +0.0, same per-element double casts).
-    ``seqfold``: one indexed fold over a constant index sequence — no
-    intermediate zipped-array allocation per row, compact generated
-    code.  ``unroll``: fully unrolled sum — fastest when the
-    expression appears once, but k copies per row (centroid scoring)
-    bloat generated methods past the JIT's limits."""
-    if _DOT_FORM == "unroll":
-        terms = "".join(
-            f" + (cast({a}[{i}] as double) * cast({b}[{i}] as double))"
-            for i in range(d)
-        )
-        return "cast(0.0 as double)" + terms
+    left-association from +0.0, same per-element double casts): one
+    indexed fold over a constant index sequence — no intermediate
+    zipped-array allocation per row, compact generated code."""
     return (
         f"aggregate(sequence(0, {d - 1}), cast(0.0 as double),"
         f" (acc, i) -> acc + (cast({a}[i] as double)"
@@ -94,7 +82,7 @@ def _fixed_dot_sql(a: str, b: str, d: int) -> str:
     )
 
 
-def _dot_sql(a: str, b, fixed: bool = True) -> str:
+def _dot_sql(a: str, b) -> str:
     """Dot product of two array SQL expressions (``b`` may be a Python
     list of floats, rendered as an exact double literal).
 
@@ -111,7 +99,7 @@ def _dot_sql(a: str, b, fixed: bool = True) -> str:
     assignment queries (llm_semantic_dedup 3.3 -> 7.5 s)."""
     if isinstance(b, (list, tuple)):
         return _fold_dot_sql(a, _render(list(b)))
-    if not _CODEGEN_DIMS or not fixed:
+    if not _CODEGEN_DIMS:
         return _fold_dot_sql(a, b)
     whens = " ".join(
         f"WHEN size({a}) = {d} AND size({b}) = {d}"
@@ -126,7 +114,7 @@ def _norm_sql(a: str) -> str:
     once per ROW (not per pair), and Catalyst's projection collapse
     inlines it into every consumer expression (each pivot angle in
     the banded path), so the smallest tree wins."""
-    return f"sqrt({_dot_sql(a, a, fixed=False)})"
+    return f"sqrt({_fold_dot_sql(a, a)})"
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -453,7 +441,24 @@ def neardup_pairs(
     return scored.select("id_a", "id_b", "cos")
 
 
-def _banded_replicas(
+#: The cells a vector can be replicated to, as offsets from its home
+#: bands (h1, h2): a qualifying pair's home bands differ by <= 1 per
+#: pivot, so it meets in cell (max(h1), max(h2)).
+_CELL_OFFSETS = ((0, 0), (0, 1), (1, 0), (1, 1))
+
+#: Row-block budget of the per-cell kernel, in doubles: a cell of n
+#: members is scored ``max(1, _BLOCK_DOUBLES // n)`` rows at a time, so
+#: one block's Gram product and masks stay at a few million doubles.
+_BLOCK_DOUBLES = 1 << 22
+
+#: Norms inside this range bound every product and partial sum of a
+#: pair's dot away from overflow and its underflow error far below the
+#: kernel's margin; pairs with a norm outside it (or NaN) skip the
+#: prefilter and always get the exact fold.
+_SAFE_NORMS = (2.0 ** -250, 2.0 ** 250)
+
+
+def _banded_homes(
     corpus: DataFrame,
     threshold: float,
     dim: int | None,
@@ -463,12 +468,10 @@ def _banded_replicas(
     eps: float,
 ) -> tuple[DataFrame, float]:
     """Shared prefix of ``banded_neardup_pairs`` and
-    ``neardup_dropped_cells``: per-vector pivot angles, home bands
-    (h1, h2), and the 2x2 adjacent-cell replication (b1, b2).
-    Returns (replicated_df, theta_t)."""
+    ``neardup_dropped_cells``: per-vector norm, pivot angles
+    (ang0, ang1, ...) and home bands (h1, h2) over the first two
+    pivots.  Returns (homes_df, theta_t)."""
     import math
-
-    from ..sources.lake import spread
 
     if dim is None:
         dim = corpus.select(
@@ -480,34 +483,80 @@ def _banded_replicas(
     pivots = _hyperplanes(dim, n_pivots)
     pnorms = [math.sqrt(sum(v * v for v in p)) for p in pivots]
 
-    base = spread(corpus.select(
+    base = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    )).withColumn("nrm", F.expr(_norm_sql("vec")))
+    ).withColumn("nrm", F.expr(_norm_sql("vec")))
     for i, (p, pn) in enumerate(zip(pivots, pnorms)):
         cosv = F.expr(_dot_sql("vec", p)) / (F.col("nrm") * F.lit(pn))
         base = base.withColumn(
             f"ang{i}",
             F.acos(F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cosv))),
         )
-    base = base.withColumn(
+    homes = base.withColumn(
         "h1", F.floor(F.col("ang0") / F.lit(theta_t))
     ).withColumn("h2", F.floor(F.col("ang1") / F.lit(theta_t)))
-    # replicate to the 2x2 adjacent cells; a qualifying pair's home
-    # bands differ by <= 1 per pivot, so it meets in cell
-    # (max(h1), max(h2)) — the emission filter in the caller keeps
-    # exactly that one meeting
+    return homes, theta_t
+
+
+def _replicate(homes: DataFrame) -> DataFrame:
+    """One row per (vector, adjacent cell (b1, b2)) over all four
+    ``_CELL_OFFSETS``."""
     cells = F.array(*[
         F.struct(
             (F.col("h1") + d1).alias("b1"), (F.col("h2") + d2).alias("b2")
         )
-        for d1 in (0, 1) for d2 in (0, 1)
+        for d1, d2 in _CELL_OFFSETS
     ])
-    repl = base.select(
-        "id", "vec", "nrm", "h1", "h2",
-        *[f"ang{i}" for i in range(n_pivots)],
-        F.explode(cells).alias("cell"),
-    ).select("*", F.col("cell.b1").alias("b1"), F.col("cell.b2").alias("b2"))
-    return repl, theta_t
+    return homes.select("*", F.explode(cells).alias("cell")).select(
+        *homes.columns, F.col("cell.b1").alias("b1"),
+        F.col("cell.b2").alias("b2"),
+    )
+
+
+def _home_counts(homes: DataFrame) -> dict[tuple[int, int], int]:
+    """Vectors per home cell (h1, h2): one aggregate of at most
+    (bands + 1)² rows, collected to the driver."""
+    return {
+        (r.h1, r.h2): r.n
+        for r in homes.groupBy("h1", "h2").agg(F.count("*").alias("n"))
+        .collect()
+    }
+
+
+def _cell_members(
+    home_counts: dict[tuple[int, int], int], b1: int, b2: int
+) -> int:
+    """The ``max_cell_size`` measure of cell (b1, b2): every vector of
+    the four homes (b1, b2) - ``_CELL_OFFSETS``, i.e. all replicas sent
+    to the cell before ``_meeting_cells`` prunes them."""
+    return sum(
+        home_counts.get((b1 - d1, b2 - d2), 0) for d1, d2 in _CELL_OFFSETS
+    )
+
+
+def _meeting_cells(
+    home_counts: dict[tuple[int, int], int], max_cell_size: int | None
+) -> set[tuple[int, int, int, int]]:
+    """The (h1, h2, b1, b2) replications that can produce a pair: a
+    member of home h goes to cell b only if some occupied home g within
+    one band of h on each pivot (h itself only when it holds two
+    members) has componentwise max(g, h) == b, the one cell where that
+    pair is emitted.  Cells whose ``_cell_members`` exceeds
+    ``max_cell_size`` get no replicas."""
+    out = set()
+    for h1, h2 in home_counts:
+        for g1 in (h1 - 1, h1, h1 + 1):
+            for g2 in (h2 - 1, h2, h2 + 1):
+                partners = home_counts.get((g1, g2), 0)
+                if (g1, g2) == (h1, h2):
+                    partners -= 1
+                b = (max(g1, h1), max(g2, h2))
+                if partners > 0 and (
+                    max_cell_size is None
+                    or _cell_members(home_counts, *b) <= max_cell_size
+                ):
+                    out.add((h1, h2, *b))
+    return out
 
 
 def banded_neardup_pairs(
@@ -532,95 +581,175 @@ def banded_neardup_pairs(
     theta_T`` for EVERY pivot.  Quantizing pivot angles into bands of
     width theta_T therefore puts a qualifying pair in the same or
     adjacent bands — recall is 1.0 by construction, not probabilistic
-    (unlike hyperplane LSH, which can miss pairs).  The exact cosine
-    filter inside the join keeps precision exact too.
+    (unlike hyperplane LSH, which can miss pairs).  Each qualifying
+    pair is emitted exactly once: only in the cell ``(greatest(h1),
+    greatest(h2))`` of the two members' home bands over the first two
+    pivots; the remaining pivots prune with precomputed-angle
+    comparisons.  Pivots are the deterministic md5-derived directions
+    of ``_hyperplanes`` — no RNG state, reproducible everywhere.
 
-    Plan shape: each vector is replicated to its 2x2 adjacent band cells
-    over two pivots and equi-joined on (band1, band2) — a shuffled hash/
-    sort-merge join, never BroadcastNestedLoopJoin.  The remaining
-    pivots prune candidates with cheap precomputed-angle comparisons
-    BEFORE the full ``dim``-element dot product.  Each qualifying pair
-    is emitted exactly once: only in the cell ``(greatest(h1),
-    greatest(h2))`` of the two members' home bands.  At 100 TB the join
-    partitions by band cell; tight thresholds (0.9 → ~7 bands/pivot,
-    ~49 cells) prune hard, loose thresholds degrade gracefully toward
-    partitioned all-pairs — the problem's intrinsic cost, but shuffled
-    across the cluster instead of broadcast-nested-looped.
+    Plan shape.  Spark computes norms, pivot angles and home bands.
+    One small aggregate collects the occupied home cells (at most
+    (bands + 1)² rows); from those counts the driver picks, per home
+    cell, the adjacent cells where a member can actually meet a partner
+    (``_meeting_cells``), so each vector is shuffled once per such cell
+    — one Exchange, hash-partitioned on (b1, b2) into min(#cells,
+    defaultParallelism) partitions, feeding ``FlatMapGroupsInPandas``.
+    No join, so no broadcast of the exploded side.
 
-    Pivots are the deterministic md5-derived directions of
-    ``_hyperplanes`` — no RNG state, reproducible everywhere.
+    The per-cell kernel scores a cell as dense row blocks: a BLAS
+    product ``A_blk @ A.T`` divided by the norm products prefilters,
+    then the exact filters (id_a < id_b, the emission cell, the pivot
+    angles) apply, and only the survivors get the exact left-to-right
+    float64 fold of ``_fold_dot_sql`` (float32 input upcast first).
+    It emits (id_a, id_b, dot, na, nb) with Spark's own norms, and
+    Spark's ``round(dot / (na * nb), score_scale) >= threshold`` keeps
+    the pairs, so rows and ``cos`` are bit-identical to the SQL fold.
 
-    Hot-cell skew guard (mirrors ``lsh_candidate_pairs``'s
-    ``max_bucket_size`` / ``simhash_neighbors_banded``'s
-    ``max_block_size``): a template cluster of near-identical
-    embeddings lands every member in one (b1, b2) cell and the
-    equi-join does |cell|² work inside that key's partition — AQE
-    skew-join splits the partition across tasks, but the intrinsic
-    pair count stands.  ``max_cell_size`` drops cells with more
-    replicated members before the join; such cells are near-certain
-    duplicate clusters better handled by exact dedup.  Use
-    ``neardup_dropped_cells`` with the same arguments to account for
-    what was dropped (cell + member count) — a production job logs
+    Prefilter margin.  A pair is discarded only when its BLAS score is
+    below ``threshold - delta``, ``delta = 10^-score_scale + 4·dim·u``
+    with u = 2⁻⁵³.  Spark keeps a pair when ``round(q) >= threshold``,
+    so q >= threshold - 0.5·10^-score_scale.  The fold and the BLAS
+    product (any summation order, with or without FMA) are each within
+    γ_dim·Σ|a_i b_i| <= γ_dim·‖a‖‖b‖ of the exact dot (γ_d = du/(1-du)),
+    so they differ by at most 2γ_dim·‖a‖‖b‖; over Spark's norm product
+    that is < 2.01·dim·u, plus one rounding of the quotient.  Both
+    terms sit inside delta with room.  The bound needs no overflow and
+    negligible underflow, which holds when both norms lie in
+    ``_SAFE_NORMS``; a pair with a norm outside it (or a NaN/inf norm,
+    the only source of a non-finite score) is always kept for the
+    fold.
+
+    Degenerate rows follow the SQL fold too.  A null id, vector or
+    element folds to null and never scores, so it is dropped before
+    the shuffle.  A cell stacks each vector length apart: two lengths
+    fold to null, while two vectors of one length other than ``dim``
+    score as in ``neardup_pairs``.  Arrow would turn a NaN dot or norm
+    into null, so the kernel flags it and Spark restores the NaN
+    (a NaN score passes ``>= threshold``, as in the SQL path).
+
+    Posture.  One task per occupied cell replaces AQE's skew-join split
+    of a hot cell: per-cell work is BLAS rather than an interpreted
+    per-pair fold, and the block loop bounds its memory.  A template
+    cluster of near-identical embeddings still lands every member in
+    one cell, so ``max_cell_size`` (mirroring ``lsh_candidate_pairs``'s
+    ``max_bucket_size`` and ``simhash_neighbors_banded``'s
+    ``max_block_size``) bounds the |cell|² work: cells with more
+    replicated members (all four replicas of every vector, counted on
+    the driver from the home-cell counts) get no replicas.  Such cells
+    are near-certain duplicate clusters better handled by exact dedup.
+    Use ``neardup_dropped_cells`` with the same arguments to account
+    for what was dropped (cell + member count) — a production job logs
     that aggregate next to its pair count so drops are visible, not
-    silent.  Default ``None`` joins every cell (exact semantics,
+    silent.  Default ``None`` scores every cell (exact semantics,
     identical rows to ``neardup_pairs``).
 
     Returns (id_a < id_b, cos) — same schema and rows as
     ``neardup_pairs`` (pinned by tests/test_llmops.py)."""
-    repl, theta_t = _banded_replicas(
+    import numpy as np
+    import pandas as pd
+
+    homes, theta_t = _banded_homes(
         corpus, threshold, dim, id_col, vec_col, n_pivots, eps
     )
-    if max_cell_size is not None:
-        # grouped cell sizes are partial-aggregated map-side to a
-        # handful of (b1, b2, n) rows — cell count is bounded by
-        # (bands_per_pivot + 1)², tiny at any corpus scale — so the
-        # keep-set broadcasts and the guard adds no fact-side shuffle
-        ok = (
-            repl.groupBy("b1", "b2")
-            .agg(F.count("*").alias("n_members"))
-            .filter(F.col("n_members") <= max_cell_size)
-            .select("b1", "b2")
-        )
-        repl = repl.join(F.broadcast(ok), ["b1", "b2"], "semi")
+    home_counts = _home_counts(homes)
+    targets = _meeting_cells(home_counts, max_cell_size)
+    width = 1 + max((h2 for _, h2 in home_counts), default=0)
 
-    a = repl.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("va"),
-        F.col("nrm").alias("na"), F.col("h1").alias("h1a"),
-        F.col("h2").alias("h2a"),
-        *[F.col(f"ang{i}").alias(f"aa{i}") for i in range(n_pivots)],
-        "b1", "b2",
+    def key(h1, h2, b1, b2):
+        # one long per replication, for ints and Columns alike
+        return ((h1 * width + h2) * 2 + (b1 - h1)) * 2 + (b2 - h2)
+
+    n_parts = max(1, min(
+        len({t[2:] for t in targets}),
+        corpus.sparkSession.sparkContext.defaultParallelism,
+    ))
+    # neither row ever scores: a null id fails id_a < id_b, and a null
+    # norm (a null vector or element) folds every dot it is in to null
+    repl = (
+        _replicate(homes.filter(
+            F.col("id").isNotNull() & F.col("nrm").isNotNull()
+        ))
+        .filter(key(*map(F.col, ("h1", "h2", "b1", "b2"))).isin(
+            sorted(key(*t) for t in targets)
+        ))
+        .repartition(n_parts, "b1", "b2")
     )
-    b = repl.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"), F.col("h1").alias("h1b"),
-        F.col("h2").alias("h2b"),
-        *[F.col(f"ang{i}").alias(f"ab{i}") for i in range(n_pivots)],
-        "b1", "b2",
+
+    block = _BLOCK_DOUBLES
+
+    def score_len(pdf: pd.DataFrame) -> pd.DataFrame:
+        vecs = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+        n, d = vecs.shape
+        ids = pdf["id"].to_numpy()
+        nrm = pdf["nrm"].to_numpy()
+        h1, h2 = pdf["h1"].to_numpy(), pdf["h2"].to_numpy()
+        angs = [pdf[f"ang{i}"].to_numpy() for i in range(n_pivots)]
+        b1, b2 = pdf["b1"].iat[0], pdf["b2"].iat[0]
+        floor = threshold - (10.0 ** -score_scale + 4 * d * 2.0 ** -53)
+        unsafe = ~((nrm >= _SAFE_NORMS[0]) & (nrm <= _SAFE_NORMS[1]))
+        step = max(1, block // n)
+        ia, ib = [], []
+        for r0 in range(0, n, step):
+            r = slice(r0, r0 + step)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = (vecs[r] @ vecs.T) / (nrm[r, None] * nrm)
+            keep = (cos >= floor) | unsafe[r, None] | unsafe
+            keep &= ids[r, None] < ids
+            keep &= np.maximum(h1[r, None], h1) == b1
+            keep &= np.maximum(h2[r, None], h2) == b2
+            for a in angs:
+                keep &= np.abs(a[r, None] - a) <= theta_t
+            i, j = np.nonzero(keep)
+            ia.append(i + r0)
+            ib.append(j)
+        ia, ib = np.concatenate(ia), np.concatenate(ib)
+        # the SQL fold: acc = 0.0; acc += double(a[k]) * double(b[k])
+        dot = np.zeros(len(ia))
+        with np.errstate(invalid="ignore", over="ignore"):
+            for k in range(d):
+                dot += vecs[ia, k] * vecs[ib, k]
+        na, nb = nrm[ia], nrm[ib]
+        return pd.DataFrame({
+            "id_a": ids[ia], "id_b": ids[ib], "dot": dot, "na": na,
+            "nb": nb,
+            "nans": np.isnan(dot) * 1 + np.isnan(na) * 2 + np.isnan(nb) * 4,
+        })
+
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        # zip_with pads the shorter array with nulls, so a pair of
+        # unequal lengths folds to null: score each length on its own
+        lens = pdf["vec"].map(len)
+        return pd.concat(
+            [score_len(g) for _, g in pdf.groupby(lens, sort=False)],
+            ignore_index=True,
+        )
+
+    def unmasked(c: str, bit: int) -> Column:
+        # Arrow sends a pandas NaN as null; the nans flag restores it
+        return F.when(
+            F.col("nans").bitwiseAND(bit) != 0, F.lit(float("nan"))
+        ).otherwise(F.col(c))
+
+    id_type = dict(homes.dtypes)["id"]
+    return (
+        repl.groupBy("b1", "b2")
+        .applyInPandas(
+            score,
+            f"id_a {id_type}, id_b {id_type}, dot double, na double,"
+            " nb double, nans int",
+        )
+        .withColumn(
+            "cos",
+            F.round(
+                unmasked("dot", 1)
+                / (unmasked("na", 2) * unmasked("nb", 4)),
+                score_scale,
+            ),
+        )
+        .filter(F.col("cos") >= threshold)
+        .select("id_a", "id_b", "cos")
     )
-    pivot_filters = [
-        F.abs(F.col(f"aa{i}") - F.col(f"ab{i}")) <= F.lit(theta_t)
-        for i in range(n_pivots)
-    ]
-    joined = (
-        a.join(b, ["b1", "b2"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.col("b1") == F.greatest("h1a", "h1b"))
-        .filter(F.col("b2") == F.greatest("h2a", "h2b"))
-    )
-    for flt in pivot_filters:
-        joined = joined.filter(flt)
-    # fixed=False: the guarded fixed-dim dot was A/B-measured 1.5-4x
-    # SLOWER in this stage (llm_cosine_topk_neardup) while winning in
-    # cosine_topk/ivf_topk -- each site keeps its measured-best form
-    scored = joined.withColumn(
-        "cos",
-        F.round(
-            F.expr(_dot_sql("va", "vb", fixed=False))
-            / (F.col("na") * F.col("nb")),
-            score_scale,
-        ),
-    ).filter(F.col("cos") >= threshold)
-    return scored.select("id_a", "id_b", "cos")
 
 
 def neardup_dropped_cells(
@@ -639,14 +768,24 @@ def neardup_dropped_cells(
     n_members counts replicated members meeting in that cell.
     Mirrors ``lsh_dropped_buckets`` / ``simhash_dropped_blocks``:
     ``.count()`` it (or aggregate n_members) for the drop metric a
-    production near-dup job logs next to its pair count."""
-    repl, _ = _banded_replicas(
+    production near-dup job logs next to its pair count.  It reads
+    the same home-cell counts and ``_cell_members`` measure as the
+    capped run, so every cell the run drops is listed."""
+    spark = corpus.sparkSession
+    schema = "b1 bigint, b2 bigint, n_members bigint"
+    if max_cell_size is None:
+        return spark.createDataFrame([], schema)
+    homes, _ = _banded_homes(
         corpus, threshold, dim, id_col, vec_col, n_pivots, eps
     )
-    grouped = repl.groupBy("b1", "b2").agg(F.count("*").alias("n_members"))
-    if max_cell_size is None:
-        return grouped.filter(F.lit(False))
-    return grouped.filter(F.col("n_members") > max_cell_size)
+    counts = _home_counts(homes)
+    cells = {(h1 + d1, h2 + d2) for h1, h2 in counts
+             for d1, d2 in _CELL_OFFSETS}
+    return spark.createDataFrame(
+        [(b1, b2, n) for b1, b2 in sorted(cells)
+         if (n := _cell_members(counts, b1, b2)) > max_cell_size],
+        schema,
+    )
 
 
 def quantize_embeddings(

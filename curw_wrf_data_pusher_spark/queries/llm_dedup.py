@@ -484,10 +484,14 @@ def llm_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Embedding-cosine near-duplicate pairs: vectors whose cosine clears a
 # high threshold are near-dups (the embedding-space analogue of
-# MinHash). The REGISTERED plan is the pivot-angle-banded equi-join
-# (exact by the triangle inequality — identical rows to all-pairs,
-# pinned by tests/test_llmops.py); neardup_pairs keeps the O(n²)
-# broadcast form as the unregistered test oracle.
+# MinHash). The REGISTERED plan is pivot-angle banding (exact by the
+# triangle inequality — identical rows to all-pairs, pinned by
+# tests/test_llmops.py): vectors replicated only into band cells where
+# they can meet a partner cross one Exchange on (b1, b2), and a
+# per-cell applyInPandas kernel scores each cell as dense blocks (BLAS
+# prefilter with a proven margin, then the exact SQL fold on the
+# survivors); neardup_pairs keeps the O(n²) broadcast form as the
+# unregistered test oracle.
 # Driver-gated through llm_cosine_topk_neardup (compound row).
 def llm_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llmops.simsearch import banded_neardup_pairs

@@ -3,6 +3,8 @@ vs brute force, multimodal mapInPandas plumbing, NetCDF reader gating."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -559,7 +561,13 @@ def test_verify_join_strategy_pinned(spark, sf_dir):
         # the two id-keyed verify joins (one per side) — the df-count
         # join deeper in the tree may legitimately broadcast (its
         # count side sits above a measured exchange)
-        assert plan.count("ShuffledHashJoin") >= 2
+        verify = re.findall(
+            r"^\(\d+\) (\w*Join)\b.*\nLeft keys \[\d+\]: \[(id_[ab])#",
+            plan, flags=re.M,
+        )
+        assert sorted(verify) == [
+            ("ShuffledHashJoin", "id_a"), ("ShuffledHashJoin", "id_b")
+        ], verify
 
 
 def test_lsh_hot_bucket_cap(spark):
@@ -733,34 +741,37 @@ def test_banded_neardup_hot_cell_cap(spark):
     ).count() == 0
 
 
-def test_banded_neardup_join_is_shuffled_equi_join(spark, sf_dir):
-    """Skew posture of the registered near-dup branch: the candidate
-    join must be a SHUFFLED equi-join on the band cells (sort-merge or
-    shuffled-hash — the shape AQE's skew-join splitting can act on),
-    and the session must have AQE skew-join enabled so a hot (b1, b2)
-    cell splits across tasks at runtime.  Interplay with
-    max_cell_size: AQE bounds the per-task straggle of a hot cell,
-    the cap bounds the intrinsic |cell|² pair count itself — a
-    production job wants both."""
+def test_banded_neardup_cells_cross_one_exchange(spark, sf_dir):
+    """Plan shape of the registered near-dup branch: the replicated
+    vectors cross ONE Exchange, clustered on the band cell (b1, b2),
+    into the per-cell ``FlatMapGroupsInPandas`` kernel.  There is no
+    join at all, so no join whose build side holds the exploded
+    (Generate) replicas — the static broadcast of a post-explode side
+    that OOM'd at 100x.  The sf corpus at 0.35 meets in one cell, a
+    single partition; a tighter threshold occupies several cells and
+    hash-partitions on (b1, b2)."""
+    from curw_wrf_data_pusher_spark.llmops.simsearch import (
+        banded_neardup_pairs,
+    )
     from curw_wrf_data_pusher_spark.queries.llm_dedup import llm_embedding_neardup
 
-    from .test_plans_quality import plan_of
+    from .test_plans_quality import count_nodes, plan_of
 
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert (
-        spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-    )
-    plan = plan_of(llm_embedding_neardup(spark, sf_dir))
-    # equi-join on the band cells, any hash flavor: at test SF the
-    # replicated side fits under autoBroadcastJoinThreshold so
-    # Catalyst picks BroadcastHashJoin; at scale the same logical plan
-    # becomes SortMergeJoin/ShuffledHashJoin, where the skew conf
-    # applies.  A BNLJ/CartesianProduct here would mean the band keys
-    # were lost (gated separately above).
-    assert any(
-        j in plan
-        for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    for df, partitioning in (
+        (llm_embedding_neardup(spark, sf_dir), r"SinglePartition"),
+        (banded_neardup_pairs(emb, threshold=0.8, dim=64),
+         r"hashpartitioning\(b1#\d+L, b2#\d+L, \d+\)"),
+    ):
+        plan = plan_of(df)
+        assert count_nodes(plan, "Generate") == 1
+        assert count_nodes(plan, "Exchange") == 1
+        assert count_nodes(plan, "FlatMapGroupsInPandas") == 1
+        assert not re.search(r"^\(\d+\) \w*Join", plan, flags=re.M)
+        exchange = re.search(
+            r"^\(\d+\) Exchange\n(?:.+\n)*?Arguments: (.*)", plan, flags=re.M
+        )
+        assert re.match(partitioning, exchange.group(1)), exchange.group(1)
 
 
 def test_simhash_hot_block_cap(spark):
@@ -849,14 +860,20 @@ def test_estimated_jaccard_from_signatures(spark):
     assert abs(est[(1, 3)] - exact[(1, 3)]) <= 0.45  # k=8 resolution
 
 
-def test_banded_neardup_property_random_vectors(spark):
+def test_banded_neardup_property_random_vectors(spark, monkeypatch):
     """Property check on adversarial-ish inputs: random-signed vectors,
-    negative components, near-parallel and antipodal pairs, thresholds
-    spanning negative to extreme — banded must equal all-pairs on every
-    combination (exactness is structural, not data-dependent)."""
+    negative components, near-parallel and antipodal pairs, pairs whose
+    cosine sits within 1e-12 of the threshold and of its 9-dp rounding
+    boundary, thresholds spanning negative to extreme — banded must
+    equal all-pairs row for row, cos included, on every combination
+    (exactness is structural, not data-dependent): for float64 and
+    float32 frames, and with the per-cell kernel forced to one row per
+    block.  A zero vector divides by zero in both forms; null, NaN
+    and off-length vectors score as the SQL fold scores them."""
     import math
     import random
 
+    from curw_wrf_data_pusher_spark.llmops import simsearch
     from curw_wrf_data_pusher_spark.llmops.simsearch import (
         banded_neardup_pairs,
         neardup_pairs,
@@ -871,25 +888,112 @@ def test_banded_neardup_property_random_vectors(spark):
     rows.append((100, rows[0][1][:]))
     rows.append((101, [-v for v in rows[1][1]]))
     rows.append((102, [v + 1e-4 for v in rows[2][1]]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for thr in (-0.5, 0.0, 0.7, 0.999999):
-        brute = {
-            (r.id_a, r.id_b, r.cos)
-            for r in neardup_pairs(emb, threshold=thr).collect()
-        }
-        banded = {
-            (r.id_a, r.id_b, r.cos)
-            for r in banded_neardup_pairs(
-                emb, threshold=thr, dim=dim
-            ).collect()
-        }
-        assert banded == brute, f"mismatch at threshold {thr}"
+    # boundary pairs against vector 110 at threshold 0.7: cosine within
+    # 1e-12 of 0.7 and of 0.6999999995 (where 9-dp HALF_UP rounding
+    # flips), spun by one Householder reflection so every component is
+    # nonzero (the reflection moves a cosine by ~1e-16)
+    refl = [rng.uniform(-1, 1) for _ in range(dim)]
+    rr = sum(x * x for x in refl)
+
+    def spin(v):
+        t = 2 * sum(x * y for x, y in zip(v, refl)) / rr
+        return [x - t * y for x, y in zip(v, refl)]
+
+    rows.append((110, spin([1.0] + [0.0] * (dim - 1))))
+    edges = (0.7 - 1e-12, 0.7 + 1e-12, 0.6999999995 - 1e-12,
+             0.6999999995 + 1e-12)
+    for k, c in enumerate(edges):
+        rows.append((120 + k, spin([c, (1 - c * c) ** 0.5] + [0.0] * (dim - 2))))
+    def triples(df):
+        # NaN != NaN: key a NaN score by a marker so sets compare
+        return {(r.id_a, r.id_b, "nan" if math.isnan(r.cos) else r.cos)
+                for r in df.collect()}
+
+    thresholds = (-0.5, 0.0, 0.7, 0.999999)
+    for vtype in ("float", "double"):
+        emb = spark.createDataFrame(
+            rows, f"vec_id long, embedding array<{vtype}>"
+        )
+        brute = {thr: triples(neardup_pairs(emb, threshold=thr))
+                 for thr in thresholds}
+        for thr in thresholds:
+            banded = triples(banded_neardup_pairs(emb, threshold=thr, dim=dim))
+            assert banded == brute[thr], f"mismatch at {vtype} threshold {thr}"
+    # the boundary cases split: only the pair below the rounding
+    # boundary is dropped
+    assert {(a, b) for a, b, _ in brute[0.7] if a == 110 and b >= 120} == {
+        (110, 120), (110, 121), (110, 123)
+    }
     # the planted pairs actually show up where they should
     high = {
         (r.id_a, r.id_b)
         for r in banded_neardup_pairs(emb, threshold=0.999, dim=dim).collect()
     }
     assert (0, 100) in high and (2, 102) in high and (1, 101) not in high
+
+    # a cell larger than one kernel row block: one row per block
+    monkeypatch.setattr(simsearch, "_BLOCK_DOUBLES", 1)
+    for thr in thresholds:
+        banded = triples(banded_neardup_pairs(emb, threshold=thr, dim=dim))
+        assert banded == brute[thr], f"mismatch at one-row blocks, {thr}"
+    monkeypatch.undo()
+
+    # a zero vector: its norm is 0, so both forms divide by zero — an
+    # error under ANSI (the session default), a null score without it,
+    # which drops the vector from both forms alike
+    zero = spark.createDataFrame(
+        rows + [(130, [0.0] * dim)], "vec_id long, embedding array<double>"
+    )
+    for call in (
+        lambda: neardup_pairs(zero, threshold=0.0),
+        lambda: banded_neardup_pairs(zero, threshold=0.0, dim=dim),
+    ):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            call().collect()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        brute = triples(neardup_pairs(zero, threshold=0.0))
+        banded = triples(banded_neardup_pairs(zero, threshold=0.0, dim=dim))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert banded == brute and not any(130 in r[:2] for r in banded)
+
+    # degenerate rows follow the SQL fold: a null vector and a null
+    # element never score; vectors of another length than dim score
+    # only against their own length (ang = pi on every pivot, so at
+    # 0.35 they sit in home (2, 2), next to the corpus); a NaN
+    # component scores NaN, which passes >= threshold
+    odd = spark.createDataFrame(
+        rows + [
+            (140, None),
+            (141, [1.0, None] + [0.5] * (dim - 2)),
+            (142, [1.0] * (dim + 1)),
+            (143, [1.0] * dim + [1.1]),
+            (144, [1.0] * (dim - 1)),
+            (145, [float("nan")] + [0.5] * (dim - 1)),
+            (146, [0.3] * (dim - 1) + [float("nan")]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    nan_ids = {145, 146}
+    # at -1 every pair meets in cell (0, 0), so both forms see them all
+    for thr in (-1.0, 0.35):
+        brute = triples(neardup_pairs(odd, threshold=thr))
+        banded = triples(banded_neardup_pairs(odd, threshold=thr, dim=dim))
+        assert (142, 143, brute_cos := next(
+            c for a, b, c in brute if (a, b) == (142, 143)
+        )) in banded and brute_cos != "nan"
+        assert (145, 146, "nan") in banded
+        if thr == -1.0:
+            assert banded == brute
+        else:
+            # only the NaN vectors' partners outside their cell differ
+            assert {r for r in banded if not nan_ids & set(r[:2])} == {
+                r for r in brute if not nan_ids & set(r[:2])
+            }
+        assert not {140, 141} & {i for r in banded for i in r[:2]}
+        assert not any({144} & set(r[:2]) for r in banded)
 
 
 def test_duplicated_line_stats(spark):
