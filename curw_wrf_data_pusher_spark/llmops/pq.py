@@ -221,7 +221,8 @@ def pq_encode_arrow(
     score_scale: int = 9,
     rotation=None,
 ) -> DataFrame:
-    """Arrow/numpy PQ encoding — the PRODUCTION twin of ``pq_encode``.
+    """Arrow/numpy PQ encoding — production; ``pq_encode`` is its HOF
+    reference form.
 
     Same map-only plan shape (the codebooks ride to the executors
     inside the cloudpickled closure; zero shuffles, zero joins), but
@@ -328,7 +329,6 @@ def pq_topk(
     vec_col: str = "embedding",
     score_scale: int = 9,
     books: list[list[list[float]]] | None = None,
-    encoder: str = "arrow",
 ) -> DataFrame:
     """ADC top-k: exact query vs PQ-compressed corpus.  Returns
     (q_id, n_id, rank, adc) — rank by (adc, n_id), ``adc`` the
@@ -339,18 +339,18 @@ def pq_topk(
     map-only encoded scan, so scoring a pair is m array lookups and
     m−1 additions.
 
-    ``encoder`` picks the corpus-encode implementation: ``"arrow"``
-    (default, production — vectorized numpy ``pq_encode_arrow``) or
-    ``"hof"`` (the Catalyst higher-order-function reference form the
-    SQL oracle mirrors term-for-term).  Both produce identical codes
-    (pinned by tests/test_pq.py); arrow won the sf0.1 A/B by ~4×
-    end-to-end on the llm_pq_topk bench row (numbers in NEXT.md)."""
+    The corpus is encoded by ``pq_encode_arrow``, whose codes equal
+    the HOF ``pq_encode`` reference (and hence the SQL oracle) code
+    for code (pinned by tests/test_pq.py).  At sf0.1 (best of 3, run
+    twice) the HOF encode ran 6.76 / 6.24 s and the arrow encode
+    2.96 / 2.60 s on the llm_pq_topk row."""
     from ..sources.lake import spread
 
     if books is None:
         books = pq_codebooks(corpus, m, k_sub, id_col, vec_col)
-    enc = pq_encode_arrow if encoder == "arrow" else pq_encode
-    codes = spread(enc(corpus, books, id_col, vec_col, score_scale))
+    codes = spread(
+        pq_encode_arrow(corpus, books, id_col, vec_col, score_scale)
+    )
     return adc_topk_over_codes(
         codes, queries, books, k=k, id_col=id_col, vec_col=vec_col,
         score_scale=score_scale,

@@ -292,9 +292,9 @@ _TAIL = [
                               # signature near-dup family) +
                               # llm_dedup_clusters (head: the pair →
                               # cluster consumer of the same
-                              # neighbor-graph contract); the numpy
-                              # popcount kernel stays pinned by the
-                              # arrow==hof pytest twin
+                              # neighbor-graph contract); the banded
+                              # scan stays pinned by the banded ==
+                              # brute-force pytest cases
     "a26_approx_sample_aggs",  # Horvitz-Thompson hash-sample
                                # estimates → llm_budget_sample (head:
                                # deterministic hash-sampling +

@@ -333,44 +333,6 @@ def decode_grid_frame(
     )
 
 
-def decode_grid_bytes(
-    content: bytes,
-    path: str,
-    mtime,
-    bbox: dict,
-    variable: str,
-    t_slice: tuple[int, int] | None,
-    system_from_path: bool,
-    open_dataset,
-) -> "pd.DataFrame | None":
-    """Decode ONE file's bytes to the long grid frame as pandas (None
-    when the bbox misses the file's grid) — used by the Spark-4
-    Python DataSource (nc_datasource.py); the mapInArrow reader above
-    uses :func:`decode_grid_arrow`.  Both wrap the same
-    :func:`_grid_arrays` core, so the ingestion paths cannot drift."""
-    g = _grid_arrays(
-        content, path, bbox, variable, t_slice, system_from_path,
-        open_dataset,
-    )
-    if g is None:
-        return None
-    return pd.DataFrame(
-        {
-            "wrf_system": g["system"],
-            "source_file": path,
-            "fgt_utc": mtime,
-            "epoch_str": g["epoch_str"],
-            "t_idx": g["t_idx"],
-            "xtime_min": g["xtime_min"],
-            "y": g["y"],
-            "x": g["x"],
-            "latitude": g["latitude"],
-            "longitude": g["longitude"],
-            "rainnc_cum": g["rainnc_cum"],
-        }
-    )
-
-
 def decode_grid_arrow(
     content: bytes,
     path: str,
@@ -382,9 +344,10 @@ def decode_grid_arrow(
     open_dataset,
     pa,
 ):
-    """Arrow twin of :func:`decode_grid_bytes`: GENERATOR of
-    ``RecordBatch``es built zero-copy from the decode's numpy columns
-    (yields nothing when the bbox misses the file's grid).  ``mtime``
+    """Decode ONE file's bytes to the long grid schema — the per-file
+    stage every reader shares: a GENERATOR of ``RecordBatch``es built
+    zero-copy from the decode's numpy columns (yields nothing when the
+    bbox misses the file's grid).  ``mtime``
     is the input batch's timestamp SCALAR — its Arrow type (us,
     session tz) is reused verbatim for ``fgt_utc``.
 

@@ -3,7 +3,8 @@ generated query index must match a fresh regeneration (file:line
 anchors cannot drift from the source), every ``oracle:NAME`` token
 must name a registered query, every backticked ``module.py::symbol``
 anchor must resolve to a real definition, and every ``test:FILE``
-anchor must name an existing test module."""
+anchor must name an existing test module (and, with ``::name``, an
+existing test in it)."""
 
 from __future__ import annotations
 
@@ -93,9 +94,21 @@ def test_symbol_anchors_resolve():
 
 
 def test_test_anchors_name_existing_modules():
+    """Every ``test:FILE.py`` anchor names an existing test module; a
+    ``test:FILE.py::name`` anchor must also name a ``def name`` in
+    that module, and a trailing ``*`` (``test_e3_*``) is a prefix at
+    least one def must match."""
     text = _coverage_text()
     bad = []
-    for mod in set(re.findall(r"test:([\w]+\.py)", text)):
-        if not os.path.exists(os.path.join(REPO, "tests", mod)):
+    for mod, name in set(re.findall(r"test:(\w+\.py)(?:::(\w+\*?))?", text)):
+        fp = os.path.join(REPO, "tests", mod)
+        if not os.path.exists(fp):
             bad.append(mod)
-    assert sorted(bad) == [], f"test: anchors naming missing modules: {bad}"
+            continue
+        if not name:
+            continue
+        stem = re.escape(name.rstrip("*"))
+        tail = r"\w*" if name.endswith("*") else ""
+        if not re.search(rf"^\s*def {stem}{tail}\s*\(", open(fp).read(), re.M):
+            bad.append(f"{mod}::{name}")
+    assert sorted(bad) == [], f"test: anchors naming missing tests: {bad}"

@@ -476,7 +476,12 @@ def test_simhash_banded_equals_broadcast_allpairs(spark, sf_dir):
     """Pigeonhole guarantee: the banded equi-join candidate generation
     plus exact bit_count verify must reproduce the O(n²) broadcast
     inequality self-join EXACTLY (every pair within the radius, their
-    hamming values, nothing else)."""
+    hamming values, nothing else) at radius 6 and 3.  Under
+    ``max_block_size`` it must equal an in-test reference of the cap
+    contract: a brute-force pair is kept iff some block where both
+    signatures share a value has at most ``cap`` members."""
+    from collections import Counter
+
     from curw_wrf_data_pusher_spark.llmops.dedup import (
         simhash_from_text,
         simhash_neighbors_banded,
@@ -485,22 +490,62 @@ def test_simhash_banded_equals_broadcast_allpairs(spark, sf_dir):
     sig = simhash_from_text(
         load_table(spark, sf_dir, "documents").repartition(8)
     ).localCheckpoint()
-    banded = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in simhash_neighbors_banded(sig, radius=6).collect()
-    }
     a = sig.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("ha"))
     b = sig.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("hb"))
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long")
-    brute = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
+    all_pairs = (
+        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= 6)
-        .collect()
+        .localCheckpoint()
+    )
+
+    def brute(radius):
+        return {
+            (r.id_a, r.id_b, r.hamming)
+            for r in all_pairs.filter(F.col("hamming") <= radius).collect()
+        }
+
+    def banded(**kw):
+        return {
+            (r.id_a, r.id_b, r.hamming)
+            for r in simhash_neighbors_banded(sig, **kw).collect()
+        }
+
+    for radius in (6, 3):
+        got = banded(radius=radius)
+        assert got == brute(radius), radius
+        assert len(got) > 0  # non-vacuous: sf corpus has near-dups
+
+    # cap contract: 32-bit signatures in radius + 1 contiguous blocks,
+    # the first bits % blocks of them one bit wider
+    radius = 6
+    blocks = radius + 1
+    base, rem = divmod(32, blocks)
+    widths = [base + (i < rem) for i in range(blocks)]
+    starts = [sum(widths[:i]) for i in range(blocks)]
+    sigs = {r.doc_id: r.simhash for r in sig.collect()}
+
+    def val(s, i):
+        return (s >> starts[i]) & ((1 << widths[i]) - 1)
+
+    members = Counter(
+        (i, val(s, i)) for s in sigs.values() for i in range(blocks)
+    )
+    # the cap sits ON a real block size, so the block of exactly `cap`
+    # members must be kept (≤, not <)
+    cap = max(n for n in members.values() if n <= 40)
+    near = brute(radius)
+    want = {
+        (x, y, h)
+        for x, y, h in near
+        if any(
+            val(sigs[x], i) == val(sigs[y], i)
+            and members[(i, val(sigs[x], i))] <= cap
+            for i in range(blocks)
+        )
     }
-    assert banded == brute
-    assert len(banded) > 0  # non-vacuous: sf corpus has near-dups
+    assert 0 < len(want) < len(near)  # the cap drops some, keeps some
+    assert banded(radius=radius, max_block_size=cap) == want
 
 
 def test_simhash_banded_radius_validation(spark):
@@ -1601,54 +1646,14 @@ def test_sampled_frames_feed_resize_and_features(spark):
     assert all(r.ok and len(r.feature) == 8 for r in feats)
 
 
-def test_simhash_banded_engines_agree(spark, sf_dir):
-    """The codegen'd bit_count self-join (engine='join', production
-    since round 15), the numpy popcount-matrix kernel (engine='arrow')
-    and the Catalyst HOF scan (engine='hof', reference) emit identical
-    pair sets — same contract as the pq_encode/pq_encode_arrow pair."""
-    from curw_wrf_data_pusher_spark.llmops.dedup import (
-        simhash_from_text,
-        simhash_neighbors_banded,
-    )
-
-    sig = simhash_from_text(
-        load_table(spark, sf_dir, "documents")
-    ).localCheckpoint()
-    key = lambda r: (r.id_a, r.id_b, r.hamming)  # noqa: E731
-    for radius in (3, 6):
-        arrow = sorted(
-            map(key, simhash_neighbors_banded(
-                sig, radius=radius, engine="arrow").collect())
-        )
-        hof = sorted(
-            map(key, simhash_neighbors_banded(
-                sig, radius=radius, engine="hof").collect())
-        )
-        join = sorted(
-            map(key, simhash_neighbors_banded(
-                sig, radius=radius, engine="join").collect())
-        )
-        assert arrow == hof == join and len(arrow) > 0
-    # the hot-block cap drops the same blocks in all engines
-    capped_a = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, max_block_size=40, engine="arrow").collect()))
-    capped_h = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, max_block_size=40, engine="hof").collect()))
-    capped_j = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, max_block_size=40, engine="join").collect()))
-    assert capped_a == capped_h == capped_j
-
-
 def test_simhash_64bit_banded_prunes_and_matches_bruteforce(spark, sf_dir):
     """The corpus-scale parameterization: 64-bit signatures at radius
     6 give 9-bit pigeonhole blocks (512 values) — the banded search
-    must (a) reproduce the brute-force pair set exactly, (b) agree
-    between the arrow and HOF engines (multi-chunk popcount path),
-    and (c) actually prune: the largest block group must be a small
-    fraction of the corpus, unlike 32-bit blocks where every value
-    is hot."""
+    must (a) reproduce the brute-force pair set exactly and (b)
+    actually prune: the largest block group must be a small fraction
+    of the corpus, unlike 32-bit blocks where every value is hot."""
     from curw_wrf_data_pusher_spark.llmops.dedup import (
-        _simhash_block_groups,
+        simhash_dropped_blocks,
         simhash_from_text,
         simhash_neighbors_banded,
     )
@@ -1660,13 +1665,8 @@ def test_simhash_64bit_banded_prunes_and_matches_bruteforce(spark, sf_dir):
     assert sig.filter("simhash < 0").count() > 0
 
     key = lambda r: (r.id_a, r.id_b, r.hamming)  # noqa: E731
-    arrow = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, bits=64, engine="arrow").collect()))
-    hof = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, bits=64, engine="hof").collect()))
-    join = sorted(map(key, simhash_neighbors_banded(
-        sig, radius=6, bits=64, engine="join").collect()))
-    assert arrow == hof == join
+    banded = sorted(map(key, simhash_neighbors_banded(
+        sig, radius=6, bits=64).collect()))
 
     a = sig.select(F.col("doc_id").alias("id_a"),
                    F.col("simhash").alias("ha"))
@@ -1679,13 +1679,14 @@ def test_simhash_64bit_banded_prunes_and_matches_bruteforce(spark, sf_dir):
         .filter(F.col("hamming") <= 6)
         .collect()
     )))
-    assert arrow == brute
+    assert banded == brute
 
     # pruning: with 9-bit blocks the hottest group is far below the
-    # corpus size (at 32 bits the hottest block held ~half the docs)
+    # corpus size (at 32 bits the hottest block held ~half the docs);
+    # a cap of 0 reports every block with its member count
     max_m = (
-        _simhash_block_groups(sig, "doc_id", "simhash", 6, 64)
-        .select(F.max(F.size("ms"))).first()[0]
+        simhash_dropped_blocks(sig, radius=6, bits=64, max_block_size=0)
+        .select(F.max("n_members")).first()[0]
     )
     assert max_m < n / 4, (max_m, n)
 
@@ -1695,7 +1696,7 @@ def test_simhash_cap_recovers_pairs_via_later_blocks(spark):
     block is capped away must still be found through a later uncapped
     matching block.  docs 0 and 1 share EVERY block; all docs share
     block 0's value (hot), so block 0 exceeds the cap — the (0, 1)
-    pair must come back via block 1+, in BOTH engines, exactly once."""
+    pair must come back via block 1+, exactly once."""
     from curw_wrf_data_pusher_spark.llmops.dedup import (
         simhash_neighbors_banded,
     )
@@ -1705,9 +1706,8 @@ def test_simhash_cap_recovers_pairs_via_later_blocks(spark):
     # distinct per doc.  docs 0 and 1 both have sig 0 (hamming 0).
     rows = [(0, 0), (1, 0)] + [(i, i << 5) for i in range(2, 30)]
     sig = spark.createDataFrame(rows, "doc_id long, simhash long")
-    for engine in ("arrow", "hof"):
-        pairs = simhash_neighbors_banded(
-            sig, radius=6, max_block_size=10, engine=engine
-        ).collect()
-        got = [(r.id_a, r.id_b, r.hamming) for r in pairs]
-        assert got == [(0, 1, 0)], (engine, got)
+    pairs = simhash_neighbors_banded(
+        sig, radius=6, max_block_size=10
+    ).collect()
+    got = [(r.id_a, r.id_b, r.hamming) for r in pairs]
+    assert got == [(0, 1, 0)], got
